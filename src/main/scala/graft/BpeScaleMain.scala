@@ -84,20 +84,15 @@ object BpeScaleMain {
     val n0 = totalToks(cur)
     val merges = scala.collection.mutable.ArrayBuffer.empty[String]
     val secs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    val probe = sys.env.contains("SPARK_GRAFT_BPE_PROBE")
-    for (k <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val t0 = System.nanoTime()
       val (pa, pb) = TrainPrep.bpeTopPair(cur)
-      val t1 = System.nanoTime()
       merges += s"$pa $pb"
       // the last round's rebuild is NOT skipped here (unlike q299): the
       // measured unit must be the full learn-round cost, and the final
       // sequences are read once more for the compression number
       cur = step(TrainPrep.bpeApplyPairs(cur, Seq((pa, pb))))
-      val t2 = System.nanoTime()
       releaseOld(spark)
-      if (probe) println(f"round $k: top1 ${(t1 - t0) / 1e9}%.2f s, " +
-        f"merge+ckpt ${(t2 - t1) / 1e9}%.2f s, release ${(System.nanoTime() - t2) / 1e9}%.2f s")
       secs += (System.nanoTime() - t0) / 1e9
     }
     val nAfter = totalToks(cur)

@@ -77,12 +77,7 @@ object PipeScaleMain {
     val indexTable = s"$workDir/index"
     val clusterDir = s"$workDir/clusters"
     val corpusDir = s"$workDir/corpus"
-    // the exact-paragraph stage's A/B knob (r18): SPARK_GRAFT_PIPE_PARA=off
-    // runs the r17-shaped pipeline (no para table) on the same host/tier,
-    // isolating the stage's fixed per-batch cost from everything else
-    val paraTable =
-      if (sys.env.get("SPARK_GRAFT_PIPE_PARA").contains("off")) ""
-      else s"$workDir/para"
+    val paraTable = s"$workDir/para"
     val ledgerPath = java.nio.file.Paths.get(s"$workDir/pipescale.jsonl")
 
     // task-metric capture, drained per wave

@@ -6,12 +6,11 @@ import java.util.Locale
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 
-/** Per-PHYSICAL-STAGE resource ledger for ANY SparkEntry query — the
-  * general form of [[SpillProbeMain]] (which decomposes one specific
-  * pipeline by hand). When a tier run reports residual spill, this names
-  * the stage it lives in without rewriting the query as cumulative
-  * prefixes: `SparkListenerStageCompleted` carries the stage's aggregated
-  * task metrics plus the call-site name, so one run yields
+/** Per-PHYSICAL-STAGE resource ledger for ANY SparkEntry query. When a
+  * tier run reports residual spill, this names the stage it lives in
+  * without rewriting the query as cumulative prefixes:
+  * `SparkListenerStageCompleted` carries the stage's aggregated task
+  * metrics plus the call-site name, so one run yields
   * (stage, wall, input, shuffle read/write, mem/disk spill) rows.
   *
   * ```

@@ -241,26 +241,16 @@ object AnnIndex {
 
   // ---- PQ (compressed-domain) read path ----------------------------------
 
-  private def vecNative: Boolean =
-    !sys.env.get("SPARK_GRAFT_VECMATH").contains("hof")
-
   /** Squared L2 between one 16-dim subspace slice of `a` and the codeword
     * column `cv` — q76/q99's shared formula (sequential fold, so the raw
     * doubles are bit-equal to the oracle's list comprehension). Expects
-    * `subspace` and `cv` columns in scope. r19: native codegen'd loop by
-    * default (pqEncode runs this |vectors|×|codewords|×|subspaces| times);
-    * the HOF form stays the `SPARK_GRAFT_VECMATH=hof` A/B arm, parity
-    * pinned in VectorMathSpec. */
+    * `subspace` and `cv` columns in scope. A native codegen'd loop:
+    * pqEncode runs this |vectors|×|codewords|×|subspaces| times, and the
+    * interpreted zip_with/aggregate fold paid a lambda dispatch per
+    * element. Parity with that fold is pinned in VectorMathSpec. */
   private def subL2(a: Column): Column =
-    if (vecNative) org.apache.spark.sql.graft.VectorMath.slice_l2sq(
+    org.apache.spark.sql.graft.VectorMath.slice_l2sq(
       a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
-    else aggregate(
-      zip_with(
-        slice(a, col("subspace") * 16 + 1, lit(16)),
-        slice(col("cv"), col("subspace") * 16 + 1, lit(16)),
-        (x, y) => (x.cast("double") - y.cast("double")) *
-          (x.cast("double") - y.cast("double"))),
-      lit(0.0), (acc, x) => acc + x)
 
   private def subspaces: Column = explode(array((0 until 4).map(lit(_)): _*))
 
@@ -320,14 +310,7 @@ object AnnIndex {
       .select(col("qid"), col("sc.id").as("vec_id"))
     // exact re-rank: shortlist + query vectors broadcast, ONE map-side
     // reduction of the vectors scan (q247's plan shape)
-    val l2 =
-      if (vecNative)
-        org.apache.spark.sql.graft.VectorMath.l2sq(col("qe"), col("embedding"))
-      else aggregate(
-        zip_with(col("qe"), col("embedding"),
-          (x, y) => (x.cast("double") - y.cast("double")) *
-            (x.cast("double") - y.cast("double"))),
-        lit(0.0), (acc, x) => acc + x)
+    val l2 = org.apache.spark.sql.graft.VectorMath.l2sq(col("qe"), col("embedding"))
     val wR = Window.partitionBy("qid").orderBy(asc("dist"), asc("vec_id"))
     vecs.select(col("vec_id"), col("embedding"))
       .join(broadcast(shortlist), Seq("vec_id"))

@@ -24,8 +24,8 @@ import org.apache.spark.storage.StorageLevel
   * round's persisted RDD, not its logical plan): the round plan references
   * the labels four times, so composing plans would grow 4^rounds and OOM
   * the driver around round 15 — the classic iterative-DataFrame trap. The
-  * cut costs an InternalRow↔Row conversion per round over the (small)
-  * label table, not the corpus.
+  * cut is a LogicalRDD over the plan's own InternalRows, so it converts no
+  * rows.
   *
   * Convergence (r18 optimization): labels only DECREASE and the node set
   * is fixed after the seed, so "no label changed" ⟺ "Σ label unchanged".
@@ -53,24 +53,15 @@ object ConnectedComponents {
     * cluster_id = the minimum node id in the component. The result is
     * persisted (its own cache, all internals released); the caller
     * unpersists it when done. */
-  /** RESULT-NEUTRAL A/B toggle: `SPARK_GRAFT_CC=legacy` restores the
-    * pre-r19 loop internals (row-converting lineage cut, unpartitioned
-    * edge cache) so both arms run from one build at matched in-run
-    * controls. Labels are identical either way — only plan shape moves. */
-  private def legacy: Boolean = sys.env.get("SPARK_GRAFT_CC").contains("legacy")
-
   def components(edges: DataFrame, maxIter: Int = 25): DataFrame = {
-    val spark = edges.sparkSession
     // small-plan view of a persisted DF: downstream rounds read its RDD,
-    // not its (growing) logical plan. r19: the cut is a LogicalRDD over
-    // the plan's own InternalRows (PlanUtil.cutLineage) — the old
-    // createDataFrame(df.rdd, schema) form paid an InternalRow→Row→
-    // InternalRow round-trip of the whole table per round per consumer
-    // (41 task-s of q279's cold profile), and erased the partitioning the
-    // edge-set optimization below depends on.
-    def cut(df: DataFrame): DataFrame =
-      if (legacy) spark.createDataFrame(df.rdd, df.schema)
-      else org.apache.spark.sql.graft.PlanUtil.cutLineage(df)
+    // not its (growing) logical plan. The cut is a LogicalRDD over the
+    // plan's own InternalRows (PlanUtil.cutLineage): a createDataFrame(
+    // df.rdd, schema) cut pays an InternalRow→Row→InternalRow round-trip
+    // of the whole table per round per consumer (41 task-s of q279's cold
+    // profile), and erases the partitioning the edge-set optimization
+    // below depends on.
+    def cut(df: DataFrame): DataFrame = org.apache.spark.sql.graft.PlanUtil.cutLineage(df)
 
     // exact Σ cluster_id of a persisted round — the monotone convergence
     // statistic (None on an empty label table; equal Nones terminate)
@@ -83,7 +74,7 @@ object ConnectedComponents {
     // references it twice, which would re-execute the (expensive) pair
     // pipeline feeding this operator twice
     val e = edges.toDF("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    // r19: persist the symmetrized edge set PRE-PARTITIONED on src. Every
+    // persist the symmetrized edge set PRE-PARTITIONED on src. Every
     // round's hop joins sym on src — without the repartition the cached
     // edge set re-exchanges once per round (rounds × the biggest table in
     // the loop); with it, the one-time exchange here is reused by the seed
@@ -92,13 +83,11 @@ object ConnectedComponents {
     // exchange-free). Skew note: a partition holds whole src groups, but
     // group sizes are bounded by the callers' bucket caps (LshBucketCap
     // and friends), the same bound the per-round aggregation relies on.
-    val sym0 = {
-      val s0 = e.select(col("src"), col("dst"))
-        .union(e.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      (if (legacy) s0 else s0.repartition(col("src")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
+    val sym0 = e.select(col("src"), col("dst"))
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val sym = cut(sym0)
 
     // seed at min(id, min neighbor) — round 1's hop result computed from

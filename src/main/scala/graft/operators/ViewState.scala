@@ -131,18 +131,6 @@ object ViewState {
         (col("__ml") * col("__mr")).as("__mult"): _*)
   }
 
-  /** The store partitions a delta can possibly join: read pruned to the
-    * delta's own key buckets (≤ NumBuckets values driver-side). Explicit
-    * schema — an all-empty store (no data files yet) reads as an empty
-    * relation instead of failing inference. */
-  private def prunedStore(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType, delta: DataFrame): DataFrame = {
-    val touched = delta.select("__bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    spark.read.schema(schema).parquet(path)
-      .filter(col("__bucket").isin(touched: _*))
-  }
-
   /** The data files currently under `dir` (flat layout — the view table
     * is unpartitioned), for the ingest write's before/after diff. */
   private def dataFiles(dir: String): Set[String] = {
@@ -156,27 +144,23 @@ object ViewState {
   private def ingest(spark: SparkSession, delta: DataFrame, stateDir: String,
       mult: Int, deltaIsLeft: Boolean): DataFrame = {
     val meta = readMeta(stateDir)
-    val legacy = sys.env.get("SPARK_GRAFT_VIEWSTATE").contains("pin")
-    // r19 (optimization): the delta's touched buckets ride the SAME job
-    // that pins the delta — an `observe` aggregate (collect_set over ≤
-    // numBuckets longs) filled by the eager checkpoint, instead of the
-    // old separate distinct().collect() round-trip. One job, not two.
-    // Task retries can only re-add the same bucket ids (the set is a
-    // function of the delta's rows), so the observed set is exact.
+    // the delta's touched buckets ride the SAME job that pins the delta —
+    // an `observe` aggregate (collect_set over ≤ numBuckets longs) filled
+    // by the eager checkpoint, not a separate distinct().collect()
+    // round-trip. Task retries can only re-add the same bucket ids (the
+    // set is a function of the delta's rows), so the observed set is
+    // exact.
     val obs = org.apache.spark.sql.Observation()
-    val dPre = withMult(delta, meta.keys, mult, meta.numBuckets)
-    val d =
-      (if (legacy) dPre
-       else dPre.observe(obs, collect_set(col("__bucket")).as("tb")))
-        .localCheckpoint(true)
-    val touched: Seq[Long] =
-      if (legacy) Nil
-      else obs.get.apply("tb").asInstanceOf[scala.collection.Seq[Any]]
-        .map(_.asInstanceOf[Long]).toSeq
+    val d = withMult(delta, meta.keys, mult, meta.numBuckets)
+      .observe(obs, collect_set(col("__bucket")).as("tb"))
+      .localCheckpoint(true)
+    val touched: Seq[Long] = obs.get.apply("tb").asInstanceOf[scala.collection.Seq[Any]]
+      .map(_.asInstanceOf[Long]).toSeq
+    // the other side's store read pruned to the delta's own key buckets;
+    // explicit schema — an all-empty store (no data files yet) reads as
+    // an empty relation instead of failing inference
     def pruned(path: String, schema: org.apache.spark.sql.types.StructType) =
-      if (legacy) prunedStore(spark, path, schema, d)
-      else spark.read.schema(schema).parquet(path)
-        .filter(col("__bucket").isin(touched: _*))
+      spark.read.schema(schema).parquet(path).filter(col("__bucket").isin(touched: _*))
     val other =
       if (deltaIsLeft) pruned(rightPath(stateDir), meta.right)
       else pruned(leftPath(stateDir), meta.left)
@@ -188,30 +172,22 @@ object ViewState {
       (if (deltaIsLeft) deltaJoin(d, other, meta.keys)
        else deltaJoin(other, d, meta.keys))
         .select(viewCols.map(col): _*)
-    // r19 (optimization): the view delta used to be PINNED (eager
-    // localCheckpoint) before the append because it is both written and
-    // returned to the caller (the q278 summary composition folds it into
-    // AggState partials), and a lazy return would re-execute the store
-    // join per consumer. But the append itself already materializes every
-    // delta row — so the write IS the single execution, and the returned
-    // frame simply reads back the files that write created (a before/after
-    // listing diff; the store is single-writer by the Generations lock
-    // contract, so the diff is exactly this batch). One job per ingest
-    // instead of two, and no delta-sized block lingers in executor memory.
-    // `SPARK_GRAFT_VIEWSTATE=pin` restores the pre-r19 eager-pin arm for
-    // A/B at matched controls (result-identical — same rows either way).
-    val dv = if (sys.env.get("SPARK_GRAFT_VIEWSTATE").contains("pin")) {
-      val pinned = dvPlan.localCheckpoint(true)
-      pinned.write.mode("append").parquet(viewPath(stateDir))
-      pinned
-    } else {
-      val before = dataFiles(viewPath(stateDir))
-      dvPlan.write.mode("append").parquet(viewPath(stateDir))
-      val fresh = (dataFiles(viewPath(stateDir)) -- before).toSeq.sorted
+    // the view delta is both written and returned to the caller (the q278
+    // summary composition folds it into AggState partials). The append
+    // already materializes every delta row, so the write IS the single
+    // execution and the returned frame reads back the files that write
+    // created (a before/after listing diff; the store is single-writer by
+    // the Generations lock contract, so the diff is exactly this batch).
+    // Pinning the delta with an eager localCheckpoint instead costs a
+    // second job per ingest and leaves a delta-sized block in executor
+    // memory.
+    val before = dataFiles(viewPath(stateDir))
+    dvPlan.write.mode("append").parquet(viewPath(stateDir))
+    val fresh = (dataFiles(viewPath(stateDir)) -- before).toSeq.sorted
+    val dv =
       if (fresh.isEmpty) // an empty delta writes no data files
         spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], meta.view)
       else spark.read.schema(meta.view).parquet(fresh: _*)
-    }
     val storeSchema = if (deltaIsLeft) meta.left else meta.right
     val storePath = if (deltaIsLeft) leftPath(stateDir) else rightPath(stateDir)
     d.select(storeSchema.fieldNames.toSeq.map(col): _*).repartition(col("__bucket"))

@@ -32,11 +32,11 @@ object Dedup {
   // --- MinHash parameters: k permutations (a*h + b) mod p over 31-bit token
   // hashes; 4 bands × 4 rows. Constants generated deterministically below and
   // interpolated into BOTH the Spark expressions and the oracle SQL.
-  private val P = 2147483647L // 2^31 - 1 (products stay < 2^62)
-  private val K = 16
+  private[graft] val P = 2147483647L // 2^31 - 1 (products stay < 2^62)
+  private[graft] val K = 16
   private val BANDS = 4
   private val ROWS = K / BANDS
-  private val AB: Seq[(Long, Long)] = (0 until K).map { i =>
+  private[graft] val AB: Seq[(Long, Long)] = (0 until K).map { i =>
     val a = (1103515245L * (i + 1)) % (P - 1) + 1
     val b = (12345L + 1000000007L * i) % P
     (a, b)
@@ -256,7 +256,7 @@ object Dedup {
       |FROM mk GROUP BY src_doc ORDER BY doc_id""".stripMargin
 
   /** 31-bit md5-based token hash, identical in Spark and DuckDB. */
-  private[queries] def tokHash(t: Column): Column =
+  private[graft] def tokHash(t: Column): Column =
     conv(substring(md5(t.cast("binary")), 1, 8), 16, 10).cast("long") % P
 
   /** q287/q288's span width and the shared positional-window build: one
@@ -266,25 +266,16 @@ object Dedup {
     * lockstep on the window construction. */
   private val SpanW = 12
   private def spanWindows(docs: DataFrame): DataFrame = {
-    // r18 (optimization): the 12-token window hash as ONE native pass
-    // (TextHashes.hashed_ngrams_seq) instead of 11 chained zip_with string
-    // concats + an interpreted md5 transform per window — bit-parity incl.
-    // positions pinned in TextHashesSpec; SPARK_GRAFT_NGRAMS=hof restores
-    // the HOF form for A/B (result-identical)
-    def hashes(w: Column): Column =
-      if (sys.env.get("SPARK_GRAFT_NGRAMS").contains("hof")) {
-        def grams(c: Column): Column =
-          (2 to SpanW).foldLeft(slice(c, lit(1), size(c) - (SpanW - 1))) { (acc, k) =>
-            zip_with(acc, slice(c, lit(k), size(c) - (SpanW - 1)),
-              (a, b) => concat(a, lit(" "), b))
-          }
-        transform(grams(w), g => tokHash(g))
-      } else org.apache.spark.sql.graft.TextHashes.hashed_ngrams_seq(w, SpanW, P)
+    // the 12-token window hash is ONE native pass (TextHashes.
+    // hashed_ngrams_seq): the HOF form chained 11 zip_with string concats
+    // plus an interpreted md5 transform per window. Bit-parity incl.
+    // positions is pinned in TextHashesSpec.
     docs
       .withColumn("w", TrainPrep.rawToks(col("text")))
       .filter(size(col("w")) >= SpanW)
       .select(col("doc_id"),
-        posexplode(hashes(col("w"))).as(Seq("pos0", "h")))
+        posexplode(org.apache.spark.sql.graft.TextHashes.hashed_ngrams_seq(
+          col("w"), SpanW, P)).as(Seq("pos0", "h")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"), col("h"))
   }
 
@@ -318,74 +309,23 @@ object Dedup {
     * < 2^41, safely under [[MaxParaDocId]] = 2^42. */
   private[graft] val ParaCopyOffset: Long = 1L << 40
 
-  /** q303/q305 shared machinery: the pinned paragraph relation
-    * (src_doc, doc_id = pid, text) and the duplicated-pid set
-    * (keep-first: of a cross-doc near-dup pair only the LATER doc's copy
-    * counts — pair order d1 < d2 is doc-then-position order under the pid
-    * encoding, the q35 discipline). Paragraphs come from real blank-line
-    * boundaries when the doc has any ([[ParaSepRe]], text normalized the
-    * same way rawToks normalizes — lower + whitespace collapse); docs
-    * without fall back to deterministic ParaW-token blocks. The pid
-    * encoding is range-GUARDED (assert_true in the projection): a doc
-    * with >= 2^20 paragraphs or an id >= 2^42 fails loudly instead of
-    * bleeding pids into a neighboring doc's range. Caller must unpersist
-    * the returned base after materializing its outputs. */
   /** The paragraph relation (src_doc, doc_id = pid, text) shared by every
     * paragraph query — boundary split with block fallback and the
     * fail-loud pid guard (see [[paraDups]]' scaladoc). Un-checkpointed:
     * callers pin it once before multi-consumer use.
     *
-    * Two result-identical physical forms (both oracle-pinned at 3 SFs):
-    * the default SINGLE-PASS form (one documents scan, per-row branch)
-    * and the r17 DUAL-SCAN form (two rlike-filtered branches) behind
-    * `SPARK_GRAFT_PARA_SCAN=dual` — a DIAGNOSTIC A/B toggle kept because
-    * the r18 100x tier read the paragraph family slower after the
-    * single-pass rewrite on a cross-round comparison the host-calib
-    * lessons (r14/r16) say not to trust without an adjacent-run control;
-    * the toggle makes the A/B one env var on one host. */
-  private[graft] def paraRelation(docs: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_PARA_SCAN").contains("dual"))
-      paraRelationDual(docs)
-    else paraRelationSingle(docs)
-
-  /** The r17 dual-scan form: two filtered branches, each its own scan —
-    * simpler per-row work, twice the input I/O. See [[paraRelation]]. */
-  private[graft] def paraRelationDual(docs: DataFrame): DataFrame = {
-    val hasSep = col("text").rlike(ParaSepRe)
-    val bounded = docs.filter(hasSep)
-      .select(col("doc_id"),
-        posexplode(filter(
-          transform(split(col("text"), ParaSepRe),
-            p => regexp_replace(lower(trim(p)), "\\s+", " ")),
-          p => length(p) > 0)).as(Seq("pi", "text")))
-      .select(col("doc_id"), col("pi").cast("long").as("pi"), col("text"))
-    val blocks = docs.filter(!hasSep)
-      .select(col("doc_id"), TrainPrep.rawToks(col("text")).as("w"))
-      .withColumn("n", size(col("w")))
-      .filter(col("n") > 0)
-      .withColumn("pi", explode(sequence(lit(0L), expr(s"(n + ${ParaW - 1}) div $ParaW") - 1)))
-      .select(col("doc_id"), col("pi"),
-        concat_ws(" ", expr(s"slice(w, CAST(pi * $ParaW + 1 AS INT), $ParaW)")).as("text"))
-    val guard = coalesce(
-      assert_true(col("pi") < ParaIdScale &&
-        col("doc_id").between(0L, MaxParaDocId - 1),
-        concat(lit("paragraph id out of range: doc_id="),
-          col("doc_id").cast("string"), lit(" pi="), col("pi").cast("string"))
-      ).cast("long"), lit(0L))
-    bounded.unionByName(blocks)
-      .select(col("doc_id").as("src_doc"),
-        (col("doc_id") * ParaIdScale + col("pi") + guard).as("doc_id"),
-        col("text"))
-  }
-
-  /** The single-pass form (r18): one projection computes a per-row array
+    * Single pass over documents: one projection computes a per-row array
     * — the normalized paragraph list for boundary docs, the raw token
     * list for block-fallback docs — one generator explodes the paragraph
     * indexes, and the text projection branches per paragraph row. `arr`
     * is a generator-child attribute, evaluated once per DOC row
     * (Generate is a projection-collapse barrier — the q310 chunk-lambda
-    * recompute cannot happen here). */
-  private[graft] def paraRelationSingle(docs: DataFrame): DataFrame = {
+    * recompute cannot happen here). A two-scan form (one rlike-filtered
+    * branch per paragraph kind) took 0.84x/0.93x of this form's time at
+    * the local 100x tier (SCALE.md §r18), but it reads the input twice
+    * wherever the rlike cannot push down to parquet, so the single pass
+    * is the design point. */
+  private[graft] def paraRelation(docs: DataFrame): DataFrame = {
     val hasSep = col("text").rlike(ParaSepRe)
     docs
       .select(col("doc_id"), hasSep.as("sep"),
@@ -428,18 +368,12 @@ object Dedup {
     * would collide with a scale-tier base doc_id >= 1e6 — identically in
     * both engines, invisible to the oracle gate). */
   private[graft] def paraBoundaryCorpus(docs: DataFrame): DataFrame = {
-    // r18 (optimization): the chunk rebuild is ONE native pass
-    // (TextHashes.chunk_join) — the old indexed-transform lambda re-read
-    // the inlined token array per chunk after projection collapse
-    // (O(tokens·chunks) re-tokenization per doc; q310 read 320 s at the
-    // 100x tier). Bit-parity pinned in TextHashesSpec;
-    // SPARK_GRAFT_PARA_CHUNK=hof restores the HOF form for A/B.
-    val chunked =
-      if (sys.env.get("SPARK_GRAFT_PARA_CHUNK").contains("hof"))
-        expr("concat_ws('\\n\\n', transform(" +
-          "sequence(0, CAST((size(w) + 9) div 10 AS INT) - 1), " +
-          "i -> concat_ws(' ', slice(w, i * 10 + 1, 10))))")
-      else org.apache.spark.sql.graft.TextHashes.chunk_join(col("w"), 10, "\n\n")
+    // the chunk rebuild is ONE native pass (TextHashes.chunk_join): an
+    // indexed-transform lambda re-reads the inlined token array per chunk
+    // after projection collapse (O(tokens·chunks) re-tokenization per
+    // doc; q310 read 320 s at the 100x tier). Bit-parity with that form
+    // is pinned in TextHashesSpec.
+    val chunked = org.apache.spark.sql.graft.TextHashes.chunk_join(col("w"), 10, "\n\n")
     val base = docs
       .withColumn("w", TrainPrep.rawToks(col("text")))
       .withColumn("text",
@@ -459,6 +393,18 @@ object Dedup {
     base.unionByName(dups)
   }
 
+  /** q303/q305 shared machinery: the pinned paragraph relation
+    * (src_doc, doc_id = pid, text) and the duplicated-pid set
+    * (keep-first: of a cross-doc near-dup pair only the LATER doc's copy
+    * counts — pair order d1 < d2 is doc-then-position order under the pid
+    * encoding, the q35 discipline). Paragraphs come from real blank-line
+    * boundaries when the doc has any ([[ParaSepRe]], text normalized the
+    * same way rawToks normalizes — lower + whitespace collapse); docs
+    * without fall back to deterministic ParaW-token blocks. The pid
+    * encoding is range-GUARDED (assert_true in the projection): a doc
+    * with >= 2^20 paragraphs or an id >= 2^42 fails loudly instead of
+    * bleeding pids into a neighboring doc's range. Caller must unpersist
+    * the returned base after materializing its outputs. */
   private def paraDups(docs: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val paras = paraRelation(docs)
       .localCheckpoint(eager = true) // consumed by minhash + the roll-ups
@@ -698,7 +644,7 @@ object Dedup {
     * the MinHash item set: unigram token sets are not discriminating on a
     * small vocabulary (nearly all docs collide), shingles make Jaccard ≈ 0
     * for unrelated docs. */
-  private def hashedDocsOf(docs: DataFrame): DataFrame =
+  private[graft] def hashedDocsOf(docs: DataFrame): DataFrame =
     docs
       // raw (non-distinct) token sequence — shingles need word order
       .select(col("doc_id"),
@@ -737,56 +683,29 @@ object Dedup {
     * verify join — round-1 recomputed it 3×. At 100 TB this is the table
     * you'd checkpoint to parquet once per corpus snapshot.
     *
-    * All K minima come from one traversal of `hs`: a fold whose accumulator
-    * zips with the (a,b) constant array. K separate array_min columns would
-    * re-inline the md5 hashing K times after CollapseProject. (MinHash over
+    * The per-doc shingle→md5→distinct→sort→K-min chain is ONE native
+    * codegen'd pass (TextHashes.minhash_shingles); its bit-parity with the
+    * HOF fold it replaced (every LSH oracle unchanged) is pinned in
+    * TextHashesSpec. The empty/short-doc gate sits BEFORE the expensive
+    * projection as size(t) >= 3 (shingles3 is empty iff under 3 tokens;
+    * NULL sizes drop) — pushdown-safe, where a filter on the computed
+    * column would re-evaluate the expression below the projection (the q37
+    * collapse lesson). hs/sz/sig extract in one Project whose
+    * subexpression elimination evaluates the struct once. (MinHash over
     * the distinct set equals MinHash over the multiset — min ignores
-    * multiplicity — so we fold the deduped `hs`, which is also smaller.)
+    * multiplicity.)
     */
-  def minhashBase(docs: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_MINHASH").contains("hof")) minhashBaseHof(docs)
-    else {
-      // r18 (optimization): the per-doc shingle→md5→distinct→sort→K-min
-      // chain as ONE native codegen'd pass (TextHashes.minhash_shingles —
-      // bit-parity with the HOF form pinned in TextHashesSpec; every LSH
-      // oracle unchanged). The empty/short-doc gate moves BEFORE the
-      // expensive projection as size(t) >= 3 — equivalent to the old
-      // size(w) > 0 (shingles3 is empty iff under 3 tokens; NULL sizes
-      // drop in both forms) and pushdown-safe, where a filter on the
-      // computed column would re-evaluate the expression below the
-      // projection (the q37 collapse lesson). hs/sz/sig extract in one
-      // Project whose subexpression elimination evaluates the struct once.
-      val t = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
-        .otherwise(split(lower(trim(col("text"))), "\\s+"))
-      docs
-        .select(col("doc_id"), t.as("t"))
-        .filter(size(col("t")) >= 3)
-        .select(col("doc_id"),
-          org.apache.spark.sql.graft.TextHashes
-            .minhash_shingles(col("t"), AB.map(_._1), AB.map(_._2), P).as("m"))
-        .select(col("doc_id"), col("m.hs").as("hs"),
-          size(col("m.hs")).as("sz"), col("m.sig").as("sig"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    }
-
-  /** The pre-r18 HOF form, kept for the bit-parity spec and as the
-    * `SPARK_GRAFT_MINHASH=hof` A/B toggle (result-identical by the spec's
-    * pin — never needed for Verify/oracle runs). */
-  private[graft] def minhashBaseHof(docs: DataFrame): DataFrame = {
-    val consts = array(AB.map { case (a, b) =>
-      struct(lit(a).as("a"), lit(b).as("b"))
-    }: _*)
-    val sigArr = aggregate(
-      col("hs"),
-      array_repeat(lit(P), K),
-      (acc, x) => zip_with(acc, consts, (m, c) =>
-        least(m, (c.getField("a") * x + c.getField("b")) % lit(P))))
-    hashedDocsOf(docs)
-      .filter(size(col("w")) > 0) // empty shingle sets would fold to NULL sigs
-      // hs sorted ascending: the verify joins use the codegen'd two-pointer
-      // sorted_intersect_size, whose contract is sorted duplicate-free input
-      .select(col("doc_id"), array_sort(array_distinct(col("h"))).as("hs"))
-      .select(col("doc_id"), col("hs"), size(col("hs")).as("sz"), sigArr.as("sig"))
+  def minhashBase(docs: DataFrame): DataFrame = {
+    val t = when(length(trim(col("text"))) === 0, array().cast("array<string>"))
+      .otherwise(split(lower(trim(col("text"))), "\\s+"))
+    docs
+      .select(col("doc_id"), t.as("t"))
+      .filter(size(col("t")) >= 3)
+      .select(col("doc_id"),
+        org.apache.spark.sql.graft.TextHashes
+          .minhash_shingles(col("t"), AB.map(_._1), AB.map(_._2), P).as("m"))
+      .select(col("doc_id"), col("m.hs").as("hs"),
+        size(col("m.hs")).as("sz"), col("m.sig").as("sig"))
       .persist(StorageLevel.MEMORY_AND_DISK)
   }
 
@@ -801,9 +720,6 @@ object Dedup {
   def lshPairs(base: DataFrame, cap: Int): DataFrame =
     lshCandidates(base, cap).filter(col("jacc") >= 0.7).select("d1", "d2", "jacc")
 
-  /** The pre-verification candidate pair set (banding output, scored but
-    * unfiltered) — what [[lshPairs]] gates at jacc ≥ 0.7. Exposed so the
-    * banding's false-positive rate is itself measurable (q194). */
   /** One (doc_id, bi, bh) row per band of each signature — the LSH index
     * key layout, shared by the self-join candidates (below) and the
     * incremental probe (q244). Deliberately does NOT carry the secondary
@@ -835,54 +751,28 @@ object Dedup {
       .cast("binary"))
   }
 
-  /** DIAGNOSTIC toggle for bench isolation ONLY: `SPARK_GRAFT_LSH_TIER=off`
-    * reverts the tiered cap to the flat cap (oversized buckets drop whole,
-    * no secondary-hash pass). This CHANGES RESULTS (q233's recovered
-    * recall) — never set it for Verify/oracle runs; it exists so the
-    * tier's two extra shuffles can be costed independently of AQE config
-    * and host load in an A/B matrix (VERDICT r9 #1). */
-  private def tierEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_LSH_TIER").contains("off")
-
-  /** RESULT-NEUTRAL diagnostic toggle: `SPARK_GRAFT_LSH_SCREEN=countjoin`
-    * reverts the mega-bucket screen from the r13 window-count form to the
-    * r12 count+join form. Both compute identical group sizes, so results
-    * are bit-identical either way — the toggle exists so the two screen
-    * shapes can be A/B'd at matched calibration (VERDICT r12 #1). */
-  private def screenViaWindow: Boolean =
-    !sys.env.get("SPARK_GRAFT_LSH_SCREEN").contains("countjoin")
-
   /** Attach each row's group size as column `cnt` — the mega-bucket
     * screen's sizing step, shared by every banded bucket build (LSH,
-    * SimHash, RHP, frame digests). Default (r13): a WINDOW count over the
-    * same keys-hash shuffle the downstream collect needs anyway — one
-    * full pass over the rows instead of the r12 count+join's two (the
-    * separate partial-aggregating count re-shuffled every band row a
-    * second time for the join-back; measured 1.2-1.8x on the LSH family).
-    * Skew safety is retained: a degenerate bucket lands in ONE WindowExec
-    * group whose buffer (ExternalAppendOnlyUnsafeRowArray) SPILLS rather
-    * than OOMs, and the downstream size filter still drops it before any
-    * collect_list array forms — the DedupSpec 100k-member stress drives
-    * exactly this path. The count+join form stays reachable via
-    * [[screenViaWindow]] for A/B isolation.
+    * SimHash, RHP, frame digests). A WINDOW count over the same keys-hash
+    * shuffle the downstream collect needs anyway: one full pass over the
+    * rows, where a groupBy count joined back re-shuffles every band row a
+    * second time (measured 1.2-1.8x on the LSH family). Skew safety: a
+    * degenerate bucket lands in ONE WindowExec group whose buffer
+    * (ExternalAppendOnlyUnsafeRowArray) SPILLS rather than OOMs, and the
+    * downstream size filter still drops it before any collect_list array
+    * forms — the DedupSpec 100k-member stress drives exactly this path.
     *
-    * PRECONDITION — non-null keys: the window form counts a NULL key as
-    * its own group while the count+join fallback's inner equi-join drops
-    * NULL-keyed rows entirely, so "bit-identical A/B" holds ONLY for
-    * provably non-null keys. Every current caller satisfies it (band
-    * hashes are md5/xxhash of non-null columns; Multimodal's frame_sha
-    * is computed from a non-null binary payload) — a future caller with
-    * nullable keys must filter nulls first or the two screen modes
-    * silently diverge. */
+    * A NULL key counts as its own group. Every current caller has
+    * non-null keys (band hashes are md5/xxhash of non-null columns;
+    * Multimodal's frame_sha is computed from a non-null binary payload);
+    * a caller whose keys can be NULL must decide whether NULL-keyed rows
+    * form a bucket and filter them first if not. */
   private[graft] def withGroupCount(rows: DataFrame, keys: Seq[String]): DataFrame =
-    if (screenViaWindow)
-      rows.withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
-    else {
-      val counts = rows.groupBy(keys.map(col): _*).agg(count(lit(1)).as("cnt"))
-      rows.join(counts, keys)
-    }
+    rows.withColumn("cnt", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
 
+  /** The pre-verification candidate pair set (banding output, scored but
+    * unfiltered) — what [[lshPairs]] gates at jacc ≥ 0.7. Exposed so the
+    * banding's false-positive rate is itself measurable (q194). */
   def lshCandidates(base: DataFrame, cap: Int): DataFrame = {
     // Mega-bucket screen: member arrays are collected ONLY for keys whose
     // group size is proven within the cap. Collecting first and filtering
@@ -892,7 +782,7 @@ object Dedup {
     // reducer even though the pair expansion itself was bounded. Sizing
     // (r13) is a WINDOW count over the same bucket-key shuffle the
     // collect needs anyway — see [[withGroupCount]] for the spill-safety
-    // argument and the count+join A/B toggle.
+    // argument.
     val bands = bandKeys(base)
     val keyed = withGroupCount(bands, Seq("bi", "bh"))
       .filter(col("cnt") >= 2)
@@ -912,8 +802,7 @@ object Dedup {
       .groupBy(col("bi"), col("bh"))
       .agg(collect_list(col("doc_id")).as("ds"))
       .select(col("ds"))
-    val big0 = keyed.filter(col("cnt") > cap)
-    val bigRows = (if (tierEnabled) big0 else big0.limit(0))
+    val bigRows = keyed.filter(col("cnt") > cap)
       .select(col("bi"), col("bh"), col("doc_id"))
       .join(base.select(col("doc_id"), col("sig")), Seq("doc_id"))
       .select(col("bi"), col("bh"), col("doc_id"), bandHash2(col("bi")).as("bh2"))
@@ -969,19 +858,19 @@ object Dedup {
     * token hashes fall in the range, pinning the verified output before
     * the next shard starts.
     *
-    * Why the verify is INSIDE the loop (r14): the stage-by-stage spill
-    * ledger (SpillProbeMain, 100x tier) attributed ALL of q220's ~4 GB
-    * spill to the verify join — the candidate pairs carry both docs'
-    * full shingle-hash arrays through a sort-merge join, and that sort
-    * is the memory cliff; candidate generation itself spills ZERO at
-    * 100x. The r13 form sharded only candidate generation and verified
-    * globally, so its spill was byte-identical at 4/8/16 shards (and
-    * ~60% HIGHER than one-shot, because the full prefix table sat in
-    * MEMORY_AND_DISK storage squeezing execution memory — now
-    * DISK_ONLY). With the verify sharded, the pair mass in flight — and
-    * with it the sort buffer — is one shard's, so at a tier where the
-    * one-shot verify spills X bytes, R can be sized until one shard's
-    * verify fits in memory entirely.
+    * Why the verify is INSIDE the loop (r14): a stage-by-stage spill
+    * ledger (100x tier; StageLedgerMain records one for any query)
+    * attributed ALL of q220's ~4 GB spill to the verify join — the
+    * candidate pairs carry both docs' full shingle-hash arrays through
+    * a sort-merge join, and that sort is the memory cliff; candidate
+    * generation itself spills ZERO at 100x. The r13 form sharded only
+    * candidate generation and verified globally, so its spill was byte-
+    * identical at 4/8/16 shards (and ~60% HIGHER than one-shot, because
+    * the full prefix table sat in MEMORY_AND_DISK storage squeezing
+    * execution memory — now DISK_ONLY). With the verify sharded, the
+    * pair mass in flight — and with it the sort buffer — is one
+    * shard's, so at a tier where the one-shot verify spills X bytes, R
+    * can be sized until one shard's verify fits in memory entirely.
     *
     * Output identity with [[prefixPairs]]: a prefix bucket lives wholly
     * in one shard (sharding is BY token hash), so no pair is lost; a
@@ -1565,24 +1454,18 @@ object Dedup {
       // deterministic in isolation and they share only the READ-ONLY
       // persisted base, which is materialized once BEFORE the fork so
       // the threads never race to compute cache blocks.
-      // SPARK_GRAFT_OVERLAP=off restores the sequential arm for A/B at
-      // matched in-run controls (result-identical by construction).
-      val overlap = !sys.env.get("SPARK_GRAFT_OVERLAP").contains("off")
       def chain(b: org.apache.spark.sql.DataFrame) =
         graft.operators.ConnectedComponents.components(
           lshPairs(b, LshBucketCap)
             .select(col("d1").as("src"), col("d2").as("dst")))
-      val (compOld, compAll) =
-        if (!overlap) (chain(base.filter(isOld)), chain(base))
-        else {
-          base.count()
-          import scala.concurrent.{Await, Future}
-          import scala.concurrent.duration.Duration
-          import scala.concurrent.ExecutionContext.Implicits.global
-          val fOld = Future(chain(base.filter(isOld)))
-          val fAll = Future(chain(base))
-          (Await.result(fOld, Duration.Inf), Await.result(fAll, Duration.Inf))
-        }
+      base.count()
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val fOld = Future(chain(base.filter(isOld)))
+      val fAll = Future(chain(base))
+      val compOld = Await.result(fOld, Duration.Inf)
+      val compAll = Await.result(fAll, Duration.Inf)
       val so = splitByClusterKey(docs.filter(isOld), compOld)
         .select(col("doc_id"), col("cluster_key").as("old_key"),
           col("split").as("old_split"))
@@ -2207,15 +2090,10 @@ object Dedup {
           "transform(sequence(0, 63), j -> CASE WHEN " +
             "substring(md5(concat('rhp_', p, '_', j)), 1, 1) < '8' " +
             "THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"))
-      // r19: the 24-plane projection dot is the native codegen'd loop by
-      // default (the HOF fold paid a lambda dispatch per element ×24 planes
-      // per vector); `SPARK_GRAFT_VECMATH=hof` restores the HOF arm —
-      // bit-parity pinned in VectorMathSpec, q252's oracle unchanged.
-      val dotC =
-        if (sys.env.get("SPARK_GRAFT_VECMATH").contains("hof")) expr(
-          "aggregate(zip_with(embedding, comp, (x, y) -> x * y), " +
-            "CAST(0.0 AS DOUBLE), (a, v) -> a + v)")
-        else org.apache.spark.sql.graft.VectorMath.dot(col("embedding"), col("comp"))
+      // the 24-plane projection dot is the native codegen'd loop (a HOF
+      // fold pays a lambda dispatch per element ×24 planes per vector);
+      // bit-parity with that fold is pinned in VectorMathSpec.
+      val dotC = org.apache.spark.sql.graft.VectorMath.dot(col("embedding"), col("comp"))
       val sig = e.join(broadcast(planes))
         .withColumn("dot", dotC)
         .groupBy("vec_id")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.CosineSimilarity.cosine_sim
+import org.apache.spark.sql.graft.VectorMath.{l2sq, slice_l2sq}
 import graft.Tables
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -35,26 +36,6 @@ object Similarity {
   private def normSql(a: String): String =
     s"sqrt(list_sum([$a[i]::DOUBLE * $a[i]::DOUBLE for i in range(1, len($a) + 1)]))"
 
-  /** Sequential-fold squared L2 — identical accumulation order to the
-    * oracle's list comprehension, so the raw double is bit-equal. Kept as
-    * the `SPARK_GRAFT_VECMATH=hof` A/B form and the VectorMathSpec parity
-    * anchor; the default is the native codegen'd loop (r19 — the HOF pays
-    * a lambda dispatch per element, |vectors|×|centroids| times in the
-    * assignment joins). */
-  private[graft] def l2HOF(a: Column, b: Column): Column = aggregate(
-    zip_with(a, b, (x, y) =>
-      (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))),
-    lit(0.0), (acc, v) => acc + v)
-
-  private def vecNative: Boolean =
-    !sys.env.get("SPARK_GRAFT_VECMATH").contains("hof")
-
-  /** The hot squared-L2: native codegen'd loop, bit-parity with [[l2HOF]]
-    * pinned in VectorMathSpec. */
-  private def l2(a: Column, b: Column): Column =
-    if (vecNative) org.apache.spark.sql.graft.VectorMath.l2sq(a, b)
-    else l2HOF(a, b)
-
   /** Nearest-centroid assignment under L2 (ties → lowest cid). `cent` must
     * be small — it is broadcast. The argmin is `min_by` over the struct
     * order (dist, cid), NOT a row_number window: min_by partially
@@ -65,7 +46,7 @@ object Similarity {
   private def assignL2(e: org.apache.spark.sql.DataFrame,
                        cent: org.apache.spark.sql.DataFrame) =
     e.join(broadcast(cent))
-      .withColumn("dist", l2(col("embedding"), col("cv")))
+      .withColumn("dist", l2sq(col("embedding"), col("cv")))
       .groupBy("vec_id")
       .agg(min_by(struct(col("cid"), col("embedding"), col("dist")),
         struct(col("dist"), col("cid"))).as("b"))
@@ -400,18 +381,8 @@ object Similarity {
         .select(col("vec_id").as("code"), col("embedding").as("cv"))
       val sub = e.select(col("vec_id"), col("embedding"))
         .withColumn("subspace", explode(array((0 until 4).map(i => lit(i)): _*)))
-      // native slice-L2 by default (r19); HOF form = the A/B arm
-      val l2 =
-        if (vecNative) org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-          col("embedding"), col("cv"),
-          (col("subspace") * 16 + 1).cast("int"), lit(16))
-        else aggregate(
-          zip_with(
-            slice(col("embedding"), col("subspace") * 16 + 1, lit(16)),
-            slice(col("cv"), col("subspace") * 16 + 1, lit(16)),
-            (a, b) => (a.cast("double") - b.cast("double")) *
-              (a.cast("double") - b.cast("double"))),
-          lit(0.0), (acc, x) => acc + x)
+      val l2 = slice_l2sq(
+        col("embedding"), col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
       // per-(vector, subspace) argmin via min_by — map-side partial agg,
       // no |codebook|× window shuffle (see q40)
       sub.join(broadcast(cw))
@@ -449,7 +420,7 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val c = e.select(col("vec_id").as("cid"), col("embedding").as("ce"))
       val exact = c.join(broadcast(q), col("qid") =!= col("cid"))
-        .withColumn("d", l2(col("qe"), col("ce")))
+        .withColumn("d", l2sq(col("qe"), col("ce")))
         .groupBy("qid")
         .agg(graft.functions.TopKByScore.top_k(5)(col("cid"), -col("d")).as("top"))
         .select(col("qid"), explode(col("top")).as("sc"))
@@ -485,7 +456,7 @@ object Similarity {
       e.select(col("vec_id"), col("embedding").as("ce"))
         .join(broadcast(cand), Seq("vec_id"))
         .join(broadcast(q), Seq("qid"))
-        .withColumn("d", l2(col("qe"), col("ce")))
+        .withColumn("d", l2sq(col("qe"), col("ce")))
         .groupBy("qid")
         .agg(graft.functions.TopKByScore.top_k(5)(col("vec_id"), -col("d")).as("top"))
         .select(col("qid"), posexplode(col("top")).as(Seq("idx", "sc")))
@@ -558,7 +529,7 @@ object Similarity {
       val members = a2.groupBy("cid").agg(count(lit(1)).as("n_members"))
       c1.join(c2, Seq("cid")).join(broadcast(members), Seq("cid"))
         .select(col("cid").as("cluster_id"), col("n_members"),
-          floor(sqrt(l2(col("cv"), col("cv2"))) * lit(1000000000.0))
+          floor(sqrt(l2sq(col("cv"), col("cv2"))) * lit(1000000000.0))
             .cast("long").as("shift_e9"))
         .orderBy("cluster_id")
     }),
@@ -633,12 +604,12 @@ object Similarity {
         .select(col("vec_id").as("qid"), col("embedding").as("qe"))
       val wQ = Window.partitionBy("qid").orderBy(asc("qdist"), asc("cid"))
       val probes = q.join(broadcast(cent))
-        .withColumn("qdist", l2(col("qe"), col("cv")))
+        .withColumn("qdist", l2sq(col("qe"), col("cv")))
         .withColumn("rn", row_number().over(wQ)).filter(col("rn") <= 2)
         .select(col("qid"), col("qe"), col("cid").as("pcid"))
       val wS = Window.partitionBy("qid").orderBy(asc("dist"), asc("cid"))
       probes.join(assign, col("pcid") === col("ccid") && col("qid") =!= col("cid"))
-        .withColumn("dist", l2(col("qe"), col("ce")))
+        .withColumn("dist", l2sq(col("qe"), col("ce")))
         .withColumn("rank", row_number().over(wS).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("qid"), col("rank"), col("cid"), round(col("dist"), 4).as("dist"))
@@ -678,7 +649,7 @@ object Similarity {
         .select(col("label"), transform(col("pm"), p => p.getField("m")).as("cv"))
       val w = Window.partitionBy("label").orderBy(desc("dist"), asc("vec_id"))
       e.join(broadcast(cent), Seq("label"))
-        .withColumn("dist", l2(col("embedding"), col("cv")))
+        .withColumn("dist", l2sq(col("embedding"), col("cv")))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter(col("rank") <= 5)
         .select(col("label"), col("rank"), col("vec_id"),
@@ -707,7 +678,7 @@ object Similarity {
         .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
         .select(col("clabel"), transform(col("pm"), p => p.getField("m")).as("cv"))
       e.join(broadcast(cent))
-        .withColumn("dist", l2(col("embedding"), col("cv")))
+        .withColumn("dist", l2sq(col("embedding"), col("cv")))
         .groupBy("vec_id", "label")
         .agg(min(when(col("label") === col("clabel"), col("dist"))).as("a"),
           min(when(col("label") =!= col("clabel"), col("dist"))).as("b"))
@@ -820,17 +791,8 @@ object Similarity {
       val e = Tables(s, dir, "embeddings")
       val cw = e.filter(col("vec_id") < 4)
         .select(col("vec_id").as("code"), col("embedding").as("cv"))
-      // native slice-L2 by default (r19); the HOF form stays the A/B arm
-      def subL2(a: Column): Column =
-        if (vecNative) org.apache.spark.sql.graft.VectorMath.slice_l2sq(
-          a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
-        else aggregate(
-          zip_with(
-            slice(a, col("subspace") * 16 + 1, lit(16)),
-            slice(col("cv"), col("subspace") * 16 + 1, lit(16)),
-            (x, y) => (x.cast("double") - y.cast("double")) *
-              (x.cast("double") - y.cast("double"))),
-          lit(0.0), (acc, x) => acc + x)
+      def subL2(a: Column): Column = slice_l2sq(
+        a, col("cv"), (col("subspace") * 16 + 1).cast("int"), lit(16))
       val subspaces = explode(array((0 until 4).map(i => lit(i)): _*))
       // 1. encode the corpus: q76's per-subspace argmin (map-side min_by)
       val codes = e.select(col("vec_id"), col("embedding"))
@@ -945,7 +907,7 @@ object Similarity {
 
   // ADC top-32 shortlist → exact L2 re-rank → top-5 (q247). The exact
   // distance is the same sequential-fold list comprehension as q100's
-  // ground truth, so the raw doubles are bit-equal to l2HOF's.
+  // ground truth, so the raw doubles are bit-equal to VectorMath.l2sq's.
   private val q247Sql: String =
     s"""WITH $pqAdcCtes,
        |cand AS (SELECT qid, vec_id FROM a

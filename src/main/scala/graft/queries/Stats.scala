@@ -37,6 +37,28 @@ object Stats {
       |   / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
       |      * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))) AS BIGINT) END""".stripMargin
 
+  /** q43's sample moments of the order price, shared VERBATIM with the
+    * oracle. Inputs are exact integer power sums of the price in cents
+    * (sx, sxx), the customer key (sy, syy) and their product (sxy), so
+    * every `n * s - s * s` difference is exact in both engines. Each
+    * difference reaches double through its decimal string: both engines
+    * parse strings to the correctly rounded double, while DuckDB's direct
+    * DECIMAL(38,0) → DOUBLE cast is not correctly rounded. sd and var are
+    * in dollars ×1e4 (var ×1e4 in dollars² is var in cents²); corr is
+    * Pearson r ×1e4. Fewer than two orders, or a constant column, report
+    * NULL, as var_samp and corr do. */
+  private val PriceMomentExprs: Seq[(String, String)] = {
+    def dbl(x: String) = s"CAST(CAST($x AS STRING) AS DOUBLE)"
+    val varCents = s"(${dbl("n * sxx - sx * sx")} / CAST(n * (n - 1) AS DOUBLE))"
+    Seq(
+      "sd_price_e4" -> s"CASE WHEN n < 2 THEN NULL ELSE CAST(floor(sqrt($varCents) * 100.0) AS BIGINT) END",
+      "var_price_e4" -> s"CASE WHEN n < 2 THEN NULL ELSE CAST(floor($varCents) AS BIGINT) END",
+      "corr_price_cust_e4" ->
+        ("CASE WHEN n * sxx - sx * sx <= 0 OR n * syy - sy * sy <= 0 THEN NULL " +
+          s"ELSE CAST(floor(${dbl("n * sxy - sx * sy")} * 10000.0 " +
+          s"/ (sqrt(${dbl("n * sxx - sx * sx")}) * sqrt(${dbl("n * syy - sy * sy")}))) AS BIGINT) END"))
+  }
+
   /** q124's pooled two-proportion z statistic ×1e4, shared VERBATIM with
     * the oracle. Inputs c_a/n_a/c_b/n_b are exact BIGINTs; degenerate arms
     * (empty, all-converted, none-converted) report z = 0 rather than a
@@ -385,14 +407,21 @@ object Stats {
     }),
 
     // ---- sample stddev / variance / correlation --------------------------
+    // Built-in var_samp/stddev_samp/corr fold doubles in engine-specific
+    // order, and rounding their results flips the last kept digit when the
+    // two engines' doubles differ by an ulp. The moments come instead from
+    // exact power sums of the price in integer cents (DECIMAL(38,0): Σp²
+    // passes 2^63 at sf0.1) and `PriceMomentExprs`, one double expression
+    // per column shared verbatim with the oracle, finished with floor().
     "q43_stats" -> ((s: SparkSession, dir: String) => {
+      val p = floor(col("o_totalprice") * 100.0 + 0.5).cast("decimal(38,0)")
+      val c = col("o_custkey").cast("decimal(38,0)")
       Tables(s, dir, "orders")
         .groupBy("o_orderstatus")
-        .agg(
-          count(lit(1)).as("n"),
-          round(stddev_samp(col("o_totalprice")), 4).as("sd_price"),
-          round(var_samp(col("o_totalprice")), 4).as("var_price"),
-          round(corr(col("o_totalprice"), col("o_custkey")), 4).as("corr_price_cust"))
+        .agg(count(lit(1)).as("n"), sum(p).as("sx"), sum(p * p).as("sxx"),
+          sum(c).as("sy"), sum(c * c).as("syy"), sum(p * c).as("sxy"))
+        .select(col("o_orderstatus") +: col("n") +:
+          PriceMomentExprs.map { case (name, sql) => expr(sql).as(name) }: _*)
         .orderBy("o_orderstatus")
     }),
 
@@ -2341,11 +2370,16 @@ object Stats {
          |FROM a ORDER BY lang""".stripMargin,
 
     "q43_stats" ->
-      """SELECT o_orderstatus, count(*) AS n,
-        | round(stddev_samp(o_totalprice),4) AS sd_price,
-        | round(var_samp(o_totalprice),4) AS var_price,
-        | round(corr(o_totalprice, o_custkey),4) AS corr_price_cust
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
+      s"""WITH t AS (SELECT o_orderstatus,
+         |        CAST(floor(o_totalprice * 100.0 + 0.5) AS DECIMAL(38,0)) AS p,
+         |        CAST(o_custkey AS DECIMAL(38,0)) AS c FROM orders),
+         |a AS (SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
+         |        sum(p) AS sx, sum(p * p) AS sxx, sum(c) AS sy,
+         |        sum(c * c) AS syy, sum(p * c) AS sxy
+         |      FROM t GROUP BY o_orderstatus)
+         |SELECT o_orderstatus, n,
+         | ${PriceMomentExprs.map { case (name, sql) => s"$sql AS $name" }.mkString(",\n ")}
+         |FROM a ORDER BY o_orderstatus""".stripMargin,
 
     "q44_percentiles" ->
       """SELECT l_returnflag,

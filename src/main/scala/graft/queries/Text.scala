@@ -19,15 +19,13 @@ import graft.Tables
   */
 object Text {
 
-  /** q231/q232's distinct-3-gram hash list: native one-pass form by
-    * default (TextHashes.hashed_ngrams_uniq — dedupe at the GRAM-STRING
-    * level, exactly `transform(array_distinct(shingles3(t)), tokHash)`;
-    * hash-level dedupe would miscount a string collision), HOF form under
-    * `SPARK_GRAFT_NGRAMS=hof` for A/B. Parity pinned in TextHashesSpec. */
+  /** q231/q232's distinct-3-gram hash list in one native pass
+    * (TextHashes.hashed_ngrams_uniq — dedupe at the GRAM-STRING level,
+    * exactly `transform(array_distinct(shingles3(t)), tokHash)`;
+    * hash-level dedupe would miscount a string collision). Parity with
+    * that HOF form pinned in TextHashesSpec. */
   private def gramHashes(t: Column): Column =
-    if (sys.env.get("SPARK_GRAFT_NGRAMS").contains("hof"))
-      transform(Dedup.shingles3(t), g => Dedup.tokHash(g))
-    else TextHashes.hashed_ngrams_uniq(t, 3, 2147483647L)
+    TextHashes.hashed_ngrams_uniq(t, 3, 2147483647L)
 
   /** q109's per-(doc, query-term) BM25 partial score (k1 = 1.2, b = 0.75),
     * ×1e6 floor-integerized — shared VERBATIM between the Spark plan and
@@ -1151,9 +1149,8 @@ object Text {
         .filter(length(trim(col("text"))) > 0)
         .select(col("doc_id"), split(lower(trim(col("text"))), "\\s+").as("t"))
         .filter(size(col("t")) >= 3)
-        // r18 (optimization): one native pass builds the distinct-gram
-        // hash list (string-level dedupe — hash-level would miscount on
-        // a collision); parity pinned in TextHashesSpec, toggle = hof
+        // one native pass builds the distinct-gram hash list
+        // (string-level dedupe — hash-level would miscount on a collision)
         .select(col("doc_id"), explode(gramHashes(col("t"))).as("h"))
       val firstCarrier = grams.groupBy("h").agg(min("doc_id").as("first_doc"))
       grams.join(firstCarrier, Seq("h"))

@@ -204,29 +204,12 @@ object TrainPrep {
 
   /** Distinct md5-hashed 8-gram set of a text column — q85's contamination
     * unit, extracted so CorpusMain's decontamination stage uses the exact
-    * construction the oracle-verified query does. The 8-gram build is
-    * slice+zip_with (one walk per position), never indexed-transform
-    * (which re-evaluates the child per index after projection collapse). */
+    * construction the oracle-verified query does. One native codegen'd
+    * pass: md5 digests token bytes directly, no gram string materializes,
+    * distinct folds in place. Bit-parity incl. element ORDER with the
+    * slice+zip_with string form is pinned in TextHashesSpec. */
   def hashedNgrams8(text: Column): Column =
-    if (sys.env.get("SPARK_GRAFT_NGRAMS").contains("hof")) hashedNgrams8Hof(text)
-    // r18 (optimization): one native codegen'd pass — md5 digests token
-    // bytes directly, no gram string materializes, distinct folds in place
-    // (bit-parity incl. element ORDER pinned in TextHashesSpec; oracles
-    // unchanged)
-    else org.apache.spark.sql.graft.TextHashes.hashed_ngrams(
-      rawToks(text), 8, 2147483647L)
-
-  /** The pre-r18 HOF form, kept for the bit-parity spec and as the
-    * `SPARK_GRAFT_NGRAMS=hof` A/B toggle (result-identical by the spec's
-    * pin). */
-  private[graft] def hashedNgrams8Hof(text: Column): Column = {
-    def ngrams8(w: Column): Column =
-      when(size(w) < 8, array().cast("array<string>"))
-        .otherwise((2 to 8).foldLeft(slice(w, lit(1), size(w) - 7)) { (acc, k) =>
-          zip_with(acc, slice(w, lit(k), size(w) - 7), (a, b) => concat(a, lit(" "), b))
-        })
-    array_distinct(transform(ngrams8(rawToks(text)), g => Dedup.tokHash(g)))
-  }
+    org.apache.spark.sql.graft.TextHashes.hashed_ngrams(rawToks(text), 8, 2147483647L)
 
   val queries: Map[String, Q] = Map(
     // ---- TF-IDF: top salient term per document ---------------------------

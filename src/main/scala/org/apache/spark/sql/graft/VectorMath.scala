@@ -18,7 +18,7 @@ import org.apache.spark.sql.types._
   * generate one primitive loop inside whole-stage codegen.
   *
   * SEMANTIC PARITY with the HOF forms is bit-exact and pinned in
-  * VectorMathSpec (`SPARK_GRAFT_VECMATH=hof` restores the HOF plans):
+  * VectorMathSpec:
   *  - doubles accumulate in array index order — the same IEEE
   *    sub/mul/add sequence as the sequential `aggregate` fold, so
   *    DuckDB-oracle parity carries over unchanged;

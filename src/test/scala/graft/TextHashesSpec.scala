@@ -150,7 +150,7 @@ class TextHashesSpec extends SparkSpec {
     // included (the size(t) >= 3 gate vs the old size(w) > 0 gate)
     val docs = Tables(spark, sf("sf0.001"), "documents")
     val native = graft.queries.Dedup.minhashBase(docs)
-    val hof = graft.queries.Dedup.minhashBaseHof(docs)
+    val hof = HofForms.minhashBase(docs)
     try {
       val n = native.select(col("doc_id"), col("hs"), col("sz").cast("long"), col("sig"))
         .collect().map(r => r.getLong(0) ->
@@ -177,7 +177,7 @@ class TextHashesSpec extends SparkSpec {
       (8L, null.asInstanceOf[String])
     ).toDF("doc_id", "text")
     val ne = graft.queries.Dedup.minhashBase(edges)
-    val he = graft.queries.Dedup.minhashBaseHof(edges)
+    val he = HofForms.minhashBase(edges)
     try {
       val a = ne.orderBy("doc_id").collect().map(_.toString).toSeq
       val b = he.orderBy("doc_id").collect().map(_.toString).toSeq
@@ -217,7 +217,7 @@ class TextHashesSpec extends SparkSpec {
     val docs = Tables(spark, sf("sf0.001"), "documents")
     val both = docs.select(col("doc_id"),
       graft.queries.TrainPrep.hashedNgrams8(col("text")).as("native"),
-      graft.queries.TrainPrep.hashedNgrams8Hof(col("text")).as("hof"))
+      HofForms.hashedNgrams8(col("text")).as("hof"))
       .collect()
     assert(both.nonEmpty)
     both.foreach { r =>
@@ -238,7 +238,7 @@ class TextHashesSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val got = edges.select(col("doc_id"),
       graft.queries.TrainPrep.hashedNgrams8(col("text")).as("native"),
-      graft.queries.TrainPrep.hashedNgrams8Hof(col("text")).as("hof"))
+      HofForms.hashedNgrams8(col("text")).as("hof"))
       .collect()
     got.foreach { r =>
       assert(r.isNullAt(1) == r.isNullAt(2), s"nullness differs: $r")
